@@ -14,7 +14,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -133,54 +132,6 @@ def make_fingerprint_udf(
     return fingerprint
 
 
-def make_exact_jaccard_udf(cfg: FingerprintConfig = DEFAULT_CONFIG):
-    """pandas UDF over candidate pairs: exact Jaccard of the two shingle sets.
-
-    Used in the verification stage after LSH bucketing — the pipeline's final
-    pair predicate is EXACT set Jaccard (not the signature estimate), so
-    precision vs the brute-force oracle is 1.0 by construction and recall is
-    purely the LSH candidate recall (>=0.996 at threshold, config.py S-curve).
-    """
-
-    @F.pandas_udf(DoubleType())
-    def exact_jaccard(text_a: pd.Series, text_b: pd.Series) -> pd.Series:
-        import numpy as np
-
-        out = []
-        for ta, tb in zip(text_a, text_b):
-            sa = kernels.shingle_hashes(kernels.tokenize(ta or ""), cfg.shingle_k)
-            sb = kernels.shingle_hashes(kernels.tokenize(tb or ""), cfg.shingle_k)
-            if sa.size == 0 and sb.size == 0:
-                out.append(1.0)
-                continue
-            # both arrays are sorted-unique (np.unique in shingle_hashes):
-            # merge-intersection, no Python set materialization
-            inter = np.intersect1d(sa, sb, assume_unique=True).size
-            union = sa.size + sb.size - inter
-            out.append(inter / union if union else 0.0)
-        return pd.Series(out)
-
-    return exact_jaccard
-
-
-def make_sig_jaccard_udf():
-    """pandas UDF: estimated Jaccard = fraction of agreeing MinHash slots.
-    Cheap pre-filter before the exact verification join pulls full texts."""
-
-    @F.pandas_udf(DoubleType())
-    def sig_jaccard(sig_a: pd.Series, sig_b: pd.Series) -> pd.Series:
-        import numpy as np
-
-        out = []
-        for a, b in zip(sig_a, sig_b):
-            a = np.asarray(a)
-            b = np.asarray(b)
-            out.append(float((a == b).mean()) if a.size else 0.0)
-        return pd.Series(out)
-
-    return sig_jaccard
-
-
 WINNOW_SCHEMA = ArrayType(
     StructType([StructField("fp", LongType(), False), StructField("pos", IntegerType(), False)])
 )
@@ -204,28 +155,3 @@ def make_winnow_udf(cfg: FingerprintConfig = DEFAULT_CONFIG):
 
     _WINNOW_UDFS[cfg] = winnow
     return winnow
-
-
-def make_hamming_udf():
-    """pandas UDF: Hamming distance between two 64-bit SimHash values —
-    vectorized popcount on the XOR."""
-
-    @F.pandas_udf(IntegerType())
-    def hamming(a: pd.Series, b: pd.Series) -> pd.Series:
-        import numpy as np
-
-        x = a.to_numpy(dtype=np.int64).view(np.uint64) ^ b.to_numpy(dtype=np.int64).view(
-            np.uint64
-        )
-        # SWAR popcount, fully vectorized
-        m1 = np.uint64(0x5555555555555555)
-        m2 = np.uint64(0x3333333333333333)
-        m4 = np.uint64(0x0F0F0F0F0F0F0F0F)
-        h01 = np.uint64(0x0101010101010101)
-        x = x - ((x >> np.uint64(1)) & m1)
-        x = (x & m2) + ((x >> np.uint64(2)) & m2)
-        x = (x + (x >> np.uint64(4))) & m4
-        x = (x * h01) >> np.uint64(56)
-        return pd.Series(x.astype("int32"))
-
-    return hamming

@@ -8,21 +8,20 @@ Reference semantics (/root/reference/lib/System/Directory/BigTrees/Delta.hs):
   findMv   (Delta.hs:85-101) pair Rm(p1) + Add(p2) with equal hashes -> Mv
 
 Spark-first:
-  * the name-join is ONE full-outer join on url;
+  * the name-join is ONE full-outer join on url; its delta rows (a digest
+    differs or is missing) are materialized once, and every kind is derived
+    from that delta-sized frame;
   * the Merkle short-circuit becomes digest-tree pruning: compare partition
-    digests first and only row-diff partitions whose digest changed
-    (operators/digest.py + diff_with_pruning below) — at 100 TB this skips
-    the scan of every unchanged partition;
-  * move detection is a self-join of the Add/Rm rows on the content digest
-    (inner equi-join), then an anti-join removes consumed pairs.
+    digests first, collect the changed bucket ids to the driver and filter
+    both snapshots on them (diff_with_pruning below) — a literal partition
+    filter, so bucket-partitioned snapshots never scan an unchanged bucket;
+  * move detection is two salted aggregates over the Add/Rm rows
+    (_match_moves), never a join or window over a whole digest group.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
-
-
-_MV_SALTS = 256  # 16x16 values of the two-hex-char md5 salt below
+from pyspark.sql import DataFrame, functions as F
 
 
 def _mv_salt(url_col: str = "url"):
@@ -34,88 +33,105 @@ def _mv_salt(url_col: str = "url"):
     return F.ascii(F.substring(h, 1, 1)) * 256 + F.ascii(F.substring(h, 2, 1))
 
 
-def _salted_rank(side: DataFrame) -> DataFrame:
-    """(url, digest) -> (digest, s, rnk, url): rank within (digest, salt) via
-    a bounded sort_array aggregate — each buffer holds group_size/_MV_SALTS
-    urls, partial-aggregated map-side; no per-digest window."""
-    return (
-        side.withColumn("s", _mv_salt())
-        .groupBy("digest", "s")
-        .agg(F.sort_array(F.collect_list("url")).alias("us"))
-        .select("digest", "s", F.posexplode("us").alias("rnk", "url"))
+def _zip_round(sides: DataFrame, keys: list[str]) -> DataFrame:
+    """(kind, url, *keys) -> one row per key group: `pairs`, the i-th sorted
+    Rm url zipped with the i-th sorted Add url for the first least(#Rm, #Add)
+    ranks, and each side's unpaired rest (`rm_left`, `add_left`)."""
+    g = sides.groupBy(*keys).agg(
+        *(
+            F.sort_array(F.collect_list(F.when(F.col("kind") == k, F.col("url")))).alias(k)
+            for k in ("Rm", "Add")
+        )
+    )
+    n = F.least(F.size("Rm"), F.size("Add"))
+    return g.select(
+        *keys,
+        F.arrays_zip(
+            F.slice("Rm", 1, n).alias("url"), F.slice("Add", 1, n).alias("url_new")
+        ).alias("pairs"),
+        F.slice("Rm", n + 1, F.size("Rm") - n).alias("rm_left"),
+        F.slice("Add", n + 1, F.size("Add") - n).alias("add_left"),
     )
 
 
-def _match_moves(rms: DataFrame, adds: DataFrame) -> DataFrame:
-    """Deterministic 1:1 (Rm url, Add url_new) matching per digest without a
-    per-digest window over the full group.  Round 1 joins salted local ranks;
-    round 2 ranks only the leftovers (salt-count imbalance) per digest —
-    bounded input, so the window there is safe even for a pathological
-    mass-move of identical content."""
-    rm1 = _salted_rank(rms)
-    ad1 = _salted_rank(adds)
-    keys = ["digest", "s", "rnk"]
-    p1 = (
-        rm1.alias("r")
-        .join(ad1.alias("a"), keys)
-        .select("digest", F.col("r.url").alias("url"), F.col("a.url").alias("url_new"))
+def _match_moves(sides: DataFrame) -> DataFrame:
+    """Deterministic 1:1 (Rm url, Add url_new) matching per digest.
+
+    sides: (kind 'Add'|'Rm', url, digest).  Round 1 aggregates per (digest,
+    md5 salt) and zips the sorted url lists rank for rank; round 2 explodes
+    only the round-1 leftovers (the salt-count imbalance between the sides)
+    and zips them per digest the same way.  No group ever holds more than
+    group_size/256 urls in round 1, so a mass move of identical content has
+    no single-task funnel, and only the residual is grouped by digest alone.
+    Rows with a null url or a null digest never pair: they are filtered out
+    before round 1."""
+    live = sides.where(F.col("url").isNotNull() & F.col("digest").isNotNull())
+    r1 = _zip_round(live.withColumn("s", _mv_salt()), ["digest", "s"])
+
+    def rows_of(urls: str, kind: str):
+        return F.transform(urls, lambda u: F.struct(F.lit(kind).alias("kind"), u.alias("url")))
+
+    left = r1.select(
+        "digest", F.inline(F.concat(rows_of("rm_left", "Rm"), rows_of("add_left", "Add")))
     )
-    rm_left = rm1.join(ad1.select(*keys), keys, "left_anti")
-    ad_left = ad1.join(rm1.select(*keys), keys, "left_anti")
-    w = Window.partitionBy("digest").orderBy("url")
-    rm2 = rm_left.withColumn("g", F.row_number().over(w))
-    ad2 = ad_left.withColumn("g", F.row_number().over(w))
-    p2 = (
-        rm2.alias("r")
-        .join(ad2.alias("a"), ["digest", "g"])
-        .select("digest", F.col("r.url").alias("url"), F.col("a.url").alias("url_new"))
-    )
-    return p1.unionByName(p2)
+    r2 = _zip_round(left, ["digest"])
+    return r1.select(F.inline("pairs")).unionByName(r2.select(F.inline("pairs")))
 
 
 def snapshot_diff(old: DataFrame, new: DataFrame, key: str = "url", digest: str = "sha256") -> DataFrame:
     """deltas(kind, url, url_new): Add / Rm / Edit / Mv between two fingerprint
-    tables (any DataFrame with `key` and `digest` columns)."""
-    o = old.select(F.col(key).alias("url"), F.col(digest).alias("old_digest"))
-    n = new.select(F.col(key).alias("url"), F.col(digest).alias("new_digest"))
-    j = o.join(n, "url", "full_outer")
+    tables (any DataFrame with `key` and `digest` columns).
 
-    adds = j.where(F.col("old_digest").isNull()).select(
-        "url", F.col("new_digest").alias("digest")
-    )
-    rms = j.where(F.col("new_digest").isNull()).select(
-        "url", F.col("old_digest").alias("digest")
-    )
-    edits = j.where(
-        F.col("old_digest").isNotNull()
-        & F.col("new_digest").isNotNull()
-        & (F.col("old_digest") != F.col("new_digest"))
-    ).select(F.lit("Edit").alias("kind"), F.col("url"), F.lit(None).cast("string").alias("url_new"))
+    Runs Spark jobs when called: the rows of the full-outer join on url whose
+    digests differ or are missing are materialized with an eager
+    localCheckpoint, the way rollup_digest_tree materializes level 0.  That
+    frame is delta-sized and a derived, recomputable artifact; Add, Rm, Edit
+    and Mv all read it instead of re-running the join once per kind.
 
-    # Mv: pair each Rm with at most one Add of identical digest, each side
-    # consumed at most once (Delta.hs:95-101 consumes each Add/Rm once;
-    # WHICH Rm pairs WHICH Add is unspecified there — any 1:1 matching is
-    # valid, ours is deterministic).  De-funneled (VERDICT r03 #5): a
-    # row_number() window partitioned by digest alone would pool a mass-move
-    # of identical-content files in ONE task's sort; instead rank within
-    # (digest, salt) via a bounded sort_array aggregate and join on
-    # (digest, salt, rank) — then only the residual rows (salt-count
-    # imbalance between the Rm and Add sides, ~sqrt-of-group-size in
-    # expectation) flow through a per-digest window.
-    mvs = _match_moves(rms, adds).select(
-        F.lit("Mv").alias("kind"), "url", "url_new"
-    )
-    consumed_rm = mvs.select(F.col("url"))
-    consumed_add = mvs.select(F.col("url_new").alias("url"))
-
-    pure_adds = adds.join(consumed_add, "url", "left_anti").select(
-        F.lit("Add").alias("kind"), "url", F.lit(None).cast("string").alias("url_new")
-    )
-    pure_rms = rms.join(consumed_rm, "url", "left_anti").select(
-        F.lit("Rm").alias("kind"), "url", F.lit(None).cast("string").alias("url_new")
+    Mv pairs each Rm with at most one Add of identical digest, each side
+    consumed at most once (Delta.hs:95-101 consumes each Add/Rm once; WHICH
+    Rm pairs WHICH Add is unspecified there — _match_moves picks one
+    deterministic 1:1 matching).  A url consumed by a Mv drops every Add
+    (new side) or Rm (old side) row of that url, whatever its digest.
+    """
+    o = old.select(F.col(key).alias("url"), F.col(digest).alias("od"))
+    n = new.select(F.col(key).alias("url"), F.col(digest).alias("nd"))
+    od, nd = F.col("od"), F.col("nd")
+    delta = (
+        o.join(n, "url", "full_outer")
+        .where(od.isNull() | nd.isNull() | (od != nd))
+        .localCheckpoint(eager=True)
     )
 
-    return pure_adds.unionByName(pure_rms).unionByName(edits).unionByName(mvs)
+    sides = delta.where(od.isNull()).select(
+        F.lit("Add").alias("kind"), "url", nd.alias("digest")
+    ).unionByName(
+        delta.where(nd.isNull()).select(F.lit("Rm").alias("kind"), "url", od.alias("digest"))
+    )
+    mvs = _match_moves(sides)
+    # the consumed-url rule as ONE aggregate per (kind, url) over the Add/Rm
+    # rows and the urls the Mv pairs consumed (an anti-join would shuffle the
+    # delta rows once per kind and broadcast the pairs once per kind): a url
+    # consumed on its side drops every copy; otherwise each copy survives.
+    # Null urls are never consumed, so their group keeps all of its copies.
+    mv = F.lit(True).alias("mv")
+    tagged = (
+        sides.select("kind", "url", F.lit(False).alias("mv"))
+        .unionByName(mvs.select(F.lit("Rm").alias("kind"), "url", mv))
+        .unionByName(mvs.select(F.lit("Add").alias("kind"), F.col("url_new").alias("url"), mv))
+    )
+    no_url = F.lit(None).cast("string")
+    pure = (
+        tagged.groupBy("kind", "url")
+        .agg(F.count_if(~F.col("mv")).cast("int").alias("copies"), F.max("mv").alias("consumed"))
+        .where(~F.col("consumed"))
+        .select("kind", "url", F.explode(F.array_repeat(no_url, F.col("copies"))).alias("url_new"))
+    )
+    edits = delta.where(od.isNotNull() & nd.isNotNull()).select(
+        F.lit("Edit").alias("kind"), "url", no_url.alias("url_new")
+    )
+    moves = mvs.select(F.lit("Mv").alias("kind"), "url", "url_new")
+    return pure.unionByName(edits).unionByName(moves)
 
 
 def changed_partitions(old_digests: DataFrame, new_digests: DataFrame) -> DataFrame:
@@ -141,12 +157,18 @@ def diff_with_pruning(
     bucket_col: str = "bucket",
 ) -> DataFrame:
     """Row-level diff restricted to partitions whose Merkle digest changed —
-    the 100 TB path: unchanged buckets are never scanned (broadcast semi-join
-    on the partition key prunes them at the source)."""
-    changed = changed_partitions(old_digests, new_digests)
-    o = old.join(F.broadcast(changed), bucket_col, "left_semi")
-    n = new.join(F.broadcast(changed), bucket_col, "left_semi")
-    return snapshot_diff(o, n)
+    the 100 TB path: unchanged buckets are never scanned.
+
+    Runs Spark jobs when called: the changed bucket ids (at most n_buckets
+    rows) are collected to the driver, then both sides are filtered on them
+    as literals.  Snapshots partitioned by `bucket_col` prune at the
+    file scan (a static partition filter, no dynamic-pruning subquery), and
+    the digest comparison runs once instead of once per consumer.  Rows with
+    a null bucket are never diffed.
+    """
+    rows = changed_partitions(old_digests, new_digests).collect()
+    changed = F.col(bucket_col).isin([r.bucket for r in rows if r.bucket is not None])
+    return snapshot_diff(old.where(changed), new.where(changed))
 
 
 def apply_deltas(

@@ -168,7 +168,9 @@ def _score_corpus_arrow(
     one IEEE sqrt of the same sequential sum, and the final division
     happens in float64 in the same order (dot / (qn * cn)).  Mismatched
     lengths or null vectors yield null cosine (zip_with's null-pad
-    propagation); two empty vectors yield 0.0/0.0 = NaN, as before.
+    propagation); a zero-norm pair, two empty vectors included, yields the
+    IEEE quotient (0.0/0.0 = NaN) — no exception, where the JVM's ANSI-mode
+    Divide would raise DIVIDE_BY_ZERO.
     """
     import numpy as np
     import pyarrow as pa
@@ -197,7 +199,10 @@ def _score_corpus_arrow(
     def _row_cos(qv, qn, cv, cn):
         if qv is None or cv is None or len(qv) != len(cv):
             return None  # zip_with null-pad -> null cosine
-        return _seq_sum64(qv * cv) / (qn * cn)  # may be inf/nan, as in JVM
+        # IEEE division, as the matrix branch does: 0/0 (two empty vectors)
+        # is nan and x/0 is inf, where Python's float / would raise
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return float(np.float64(_seq_sum64(qv * cv)) / np.float64(qn * cn))
 
     def score(batches):
         for batch in batches:

@@ -373,3 +373,22 @@ def test_bench_legs_release_their_caches(spark):
     for name, fn in bench.QUERIES.items():
         fn(spark, sf_dir)
         assert cm.isEmpty(), f"bench query {name!r} leaked Dataset cache entries"
+
+
+def test_fingerprint_keeps_wide_file_input_partitions(spark, pages, tmp_path):
+    """A file-backed input with more files than slots is already wide: the
+    inputFiles() heuristic skips the repartition, and nothing may coalesce
+    it either — only an explicit ensure_parallelism=False caps the stage."""
+    slots = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "wide")
+    pages.repartition(2 * slots).write.parquet(path)
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "64k")
+    try:
+        wide = spark.read.parquet(path)
+        n_in = wide.rdd.getNumPartitions()
+        assert len(wide.inputFiles()) >= slots and n_in > slots
+        assert fingerprint_docs(wide).rdd.getNumPartitions() == n_in
+        assert fingerprint_docs(wide, ensure_parallelism=False).rdd.getNumPartitions() == slots
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)

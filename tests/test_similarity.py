@@ -195,3 +195,15 @@ def test_ivf_planted_neardups_found(spark, vec_df):
     got = ivf_topk(q, vec_df, k=1, dim=DIM, n_centroids=8, n_probe=3).collect()
     hit = sum(1 for r in got if r.neighbor_id == r.query_id - 100)
     assert hit >= 8
+
+
+def test_topk_empty_vectors_score_nan_not_crash(spark):
+    """Two empty vectors have a 0/0 cosine: NaN, as the Arrow path's matrix
+    branch gives for any zero-norm pair, instead of a Python
+    ZeroDivisionError that fails the job."""
+    import math
+
+    df = spark.createDataFrame([(1, []), (2, [])], "vec_id long, embedding array<double>")
+    got = {(r.query_id, r.neighbor_id): r.cosine for r in brute_force_topk(df, df, k=1).collect()}
+    assert set(got) == {(1, 2), (2, 1)}
+    assert all(math.isnan(c) for c in got.values())

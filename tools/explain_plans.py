@@ -114,21 +114,22 @@ def main() -> None:
         similarity.brute_force_topk(emb.limit(3), emb, k=5)
     )
 
-    # 4e. snapshot_diff move matching: rank-within-(digest,salt) via a
-    # sort_array AGGREGATE + equi-join on (digest, salt, rank) — the only
-    # window runs on the residual anti-join leftovers, so a mass-move of
-    # identical-content files never funnels one digest through one task
-    # (VERDICT r03 #5)
+    # 4e. snapshot_diff: the full-outer join's delta rows are materialized
+    # once (eager localCheckpoint, so the plan below starts at that scan);
+    # Mv matching is two salted aggregates — sorted url lists per (digest,
+    # salt), then per digest over the round-1 leftovers only — and the
+    # consumed-url rule is one aggregate on (kind, url).  No join or window
+    # ever sees a whole digest group, so a mass move of identical-content
+    # files never funnels one digest through one task (VERDICT r03 #5)
     from bigtrees_spark.operators import diff as diffmod
 
     old_fp = fpd.select("url", "sha256")
     new_fp = old_fp.withColumn(
         "url", F.concat(F.lit("moved/"), F.col("url"))
     )
-    # simple mode: the formatted dump of this 40-operator tree runs ~2700
-    # lines; the tree alone shows the property (ObjectHashAggregate ranks,
-    # equi-joins on (digest,s,rnk), windows only on the anti-join residue)
-    sections["snapshot_diff: salted 1:1 move matching (no per-digest window funnel)"] = plan_of(
+    # simple mode: the tree alone shows the property (ObjectHashAggregate on
+    # (digest, s), then on digest over Generate'd leftovers; no Window)
+    sections["snapshot_diff: delta materialized once, moves matched in two salted aggregates"] = plan_of(
         diffmod.snapshot_diff(old_fp, new_fp), mode="simple"
     )
 
